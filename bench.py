@@ -5,7 +5,9 @@ on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Execution is forced with the noop sink (full computation, no driver-side
-collect cost). Each query runs once after a session warm-up query.
+collect cost). Each query runs once after a session warm-up query. A
+warm-up failure is printed with its traceback, and the run then exits 1
+after the JSON line.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -97,11 +100,14 @@ def main() -> None:
     # headline plan (JIT cost is per-plan, not per-data; measuring it against
     # sf0.1 would just measure javac). Then time the real SF cold-cache.
     warm_dir = "/root/testdata/sf0.001"
+    warm_failed = []
     for name in headline:
         try:
             run_one(spark, name, warm_dir)
         except Exception:
-            pass
+            warm_failed.append(name)
+            sys.stderr.write(f"bench: warm-up of {name} failed\n")
+            traceback.print_exc()
 
     # best-of-2 at the real SF: first run pays AQE re-planning / JIT for
     # this data size, the min is the steady-state number a warm cluster sees
@@ -120,6 +126,9 @@ def main() -> None:
             }
         )
     )
+    if warm_failed:
+        sys.stderr.write(f"bench: warm-up failed for {warm_failed}\n")
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mbgspark import jvmseam
@@ -362,39 +362,77 @@ def merge_by_key(
     Ties break toward the update side (is_update desc) to mirror $set-wins.
 
     ``partition_col``: prune ``existing`` to the partitions the updates
-    touch before the window (the same touched-partitions contract as the
-    streaming merge sink — a re-delivered key keeps its partition value).
-    Without it, a caller handing in a full store scan pays a store-wide
-    shuffle for a one-day update; with it, merge cost tracks touched
-    partitions and the isin filter lands as a PartitionFilter on the store
-    scan (plan-pinned). The returned frame then only covers touched
-    partitions — pair with dynamic partition overwrite, exactly like the
-    sink.
+    touch before the window. Without it, a caller handing in a full store
+    scan pays a store-wide shuffle for a one-day update; with it, merge
+    cost tracks touched partitions and the isin filter lands as a
+    PartitionFilter on the store scan (plan-pinned). The returned frame
+    then only covers touched partitions — pair with dynamic partition
+    overwrite, exactly like the streaming merge sink.
+
+    With ``partition_col`` the upsert is keyed by ``(partition_col, key)``:
+    the store holds the latest row per key WITHIN each partition value.
+    This is the touched-partitions contract of the reference's per-day
+    collections (utils.py:583-584): a re-delivered key keeps its created_at,
+    hence its partition. A key that does arrive with a different partition
+    value lands as a new row in that partition, and its older row stays
+    where it was — whether or not the update also touches the old
+    partition. Keying the window this way lets ONE hash exchange on
+    ``partition_col`` serve both the merge and ``write_partitioned``'s
+    one-file-per-partition compaction (EnsureRequirements drops the
+    writer's ``repartition`` as already satisfied).
 
     Passing ``partition_col`` makes plan CONSTRUCTION eager: the touched
     partition values are collect()ed here (one tiny distinct over the
-    updates), not at action time. NULL partition values in the updates are
-    handled explicitly with an ``isNull`` branch — a plain ``isin`` never
-    matches NULL, which would prune away existing NULL-partition rows and
-    turn a re-delivered NULL-partition key into a duplicate (ADVICE r3)."""
+    updates), not at action time. The streaming sink reads them off its
+    one materializing pass over the batch instead (``start_merge_sink``).
+    NULL partition values are matched explicitly — see ``_touched_filter``."""
     if partition_col is not None:
         touched = [
             r[partition_col]
             for r in updates.select(partition_col).distinct().collect()
         ]
-        non_null = [v for v in touched if v is not None]
-        pred = F.col(partition_col).isin(non_null)
-        if len(non_null) < len(touched):
-            pred = pred | F.col(partition_col).isNull()
-        existing = existing.filter(pred)
-    ex = existing.withColumn("__is_update", F.lit(0))
-    up = updates.withColumn("__is_update", F.lit(1))
-    w = Window.partitionBy(key).orderBy(
+        existing = existing.filter(_touched_filter(partition_col, touched))
+    return _merge_latest(existing, updates, key, order_col, partition_col)
+
+
+def _touched_filter(partition_col: str, touched: list) -> Column:
+    """Rows whose ``partition_col`` is one of ``touched`` (which may hold
+    ``None``). A plain ``isin`` never matches NULL, which would prune away
+    existing NULL-partition rows and turn a re-delivered NULL-partition
+    key into a duplicate (ADVICE r3) — so a ``None`` adds an ``isNull``
+    branch."""
+    non_null = [v for v in touched if v is not None]
+    pred = F.col(partition_col).isin(non_null)
+    if len(non_null) < len(touched):
+        pred = pred | F.col(partition_col).isNull()
+    return pred
+
+
+def _merge_latest(
+    existing: DataFrame | None,
+    updates: DataFrame,
+    key: str,
+    order_col: str,
+    partition_col: str | None = None,
+) -> DataFrame:
+    """The keep-latest union behind ``merge_by_key``, over an ``existing``
+    the caller already pruned (``None`` = no store yet). With
+    ``partition_col`` the union is hashed on it and the window keyed by
+    ``(partition_col, key)`` — see ``merge_by_key`` for that contract."""
+    rows = updates.withColumn("__is_update", F.lit(1))
+    if existing is not None:
+        rows = existing.withColumn("__is_update", F.lit(0)).unionByName(
+            rows, allowMissingColumns=True
+        )
+    keys = [key]
+    if partition_col is not None:
+        rows = rows.repartition(partition_col)
+        keys = [partition_col, key]
+    w = Window.partitionBy(*keys).orderBy(
         F.col("__is_update").desc(), F.col(order_col).desc_nulls_last()
     )
     return (
-        ex.unionByName(up, allowMissingColumns=True)
-        .withColumn("__rn", F.row_number().over(w))
+        rows.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__is_update")
     )
@@ -422,11 +460,15 @@ def write_bucketed(
 
 def existing_partition_values(spark: SparkSession, path: str, partition_col: str) -> DataFrame:
     """F6 skip-scan support: list partition values already materialized, for
-    the incremental loader's anti-join (resilient_etl.py:304-318)."""
-    try:
-        return spark.read.parquet(path).select(partition_col).distinct()
-    except Exception:
+    the incremental loader's anti-join (resilient_etl.py:304-318). Only a
+    missing store means "no partitions"; any other read failure (corrupt
+    footer, a directory that is not a parquet store) raises, so a
+    ``retention_sweep`` over an unreadable store fails instead of silently
+    dropping nothing."""
+    fs, p = jvmseam.hadoop_fs(spark, path)
+    if not fs.exists(p):
         return spark.createDataFrame([], f"{partition_col} string")
+    return spark.read.parquet(path).select(partition_col).distinct()
 
 
 def interleave_bits(qa, qb, bits: int = 8):

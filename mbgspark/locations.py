@@ -28,7 +28,7 @@ Matching semantics flattened from ``detect_location_from_text``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mbgspark.locations_data import INDONESIA_LOCATIONS
@@ -375,16 +375,4 @@ def locate_compiled(
         *fact.columns,
         F.col("__hit.province").alias("province"),
         F.col("__hit.city").alias("city"),
-    )
-
-
-def default_locations_dim(spark: SparkSession) -> DataFrame:
-    """The full dictionary as the DEFAULT dim DataFrame (VERDICT r1 item 4);
-    the 12-row sample in schema.DEFAULT_LOCATIONS remains available for
-    small-dim paths (e.g. the lifecycle's compiled CASE chain)."""
-    from mbgspark.schema import LOCATIONS_DIM_SCHEMA  # noqa: F401  (shape doc)
-
-    return spark.createDataFrame(
-        build_full_locations_dim(),
-        "province string, city string, dict_order int, term string",
     )

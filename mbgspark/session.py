@@ -61,7 +61,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ensure_session_conf(spark)
+    return spark
 
 
 def ensure_session_conf(spark: SparkSession) -> None:
@@ -78,17 +80,23 @@ def ensure_session_conf(spark: SparkSession) -> None:
       TIMESTAMP, not TIMESTAMP_NTZ (testdata round 3 switched events.ts /
       o_orderdate / l_shipdate to naive micros; NTZ breaks tz-typed
       functions like unix_micros and needlessly forks the type surface —
-      with the session pinned UTC the instant values are identical)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    for k, v in (
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-    ):
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-modifiable in exotic deployments
+      with the session pinned UTC the instant values are identical).
+
+    ``get_spark`` calls this too, so the engine's own sessions never run
+    with Spark 4's default ANSI mode. Each value is read back after it is
+    set; a session that refuses one raises instead of running with other
+    semantics than the ones its results are checked against."""
+    pins = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.ansi.enabled": "false",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    }
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    wrong = {k: got for k, v in pins.items() if (got := spark.conf.get(k)) != v}
+    if wrong:
+        raise RuntimeError(f"session conf did not hold, expected {pins}: got {wrong}")
 
 
 # Cluster sizing profiles: the conf deltas this engine needs at each scale

@@ -19,10 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructField, StructType
 
 from mbgspark import jvmseam
-from mbgspark.io import merge_by_key, write_partitioned
-from mbgspark.operators.dedup import keep_latest_per_key
+from mbgspark.io import _merge_latest, _touched_filter, write_partitioned
 from mbgspark.schema import TWEET_RAW_SCHEMA
 
 
@@ -193,44 +193,79 @@ def start_merge_sink(
     batches (crash recovery) converge to the same store state — the
     exactly-once analog of Mongo upsert (resilient_scraper.py:944-972).
 
+    Each micro-batch runs three Spark jobs:
+
+    - one materializing pass: the transformed batch is persisted and
+      written to the ``noop`` sink, with an ``Observation`` of the
+      ``event_date`` values it touches (plus a has-NULL flag) riding
+      along — the source is scanned and transformed once, and no
+      separate distinct job collects the touched days;
+    - the merge-and-write, two jobs (one exchange and the write): store
+      rows of the touched days (a PartitionFilter on the store scan, so
+      merge cost tracks touched days, not store size) are unioned with
+      the cached batch, hashed on ``event_date`` once, reduced to the
+      latest row per ``(event_date, key)``, and written with dynamic
+      partition overwrite — the same exchange compacts each day into
+      one file.
+
+    A re-delivered key keeps its created_at, hence its day (the same
+    contract as the reference's per-day collections, utils.py:583-584);
+    what a key that does change day leaves behind is ``merge_by_key``'s
+    ``(partition_col, key)`` contract. The store is read with a known
+    schema: inferred once when the query starts (with ``event_date`` typed
+    as the batch types it), then the schema of the frame the sink last
+    wrote — so no batch pays a footer-inference job, and a store column the
+    stream lacks is carried along, never dropped.
+
     ``max_records_per_file`` flows to ``write_partitioned``: at 100 TB a
     hot day is MANY part files under its partition directory, a store
     shape the bound produces automatically; the soak harness lowers it
     to force that directory shape at test scale (tools/merge_soak.py)."""
+    from pyspark.sql import Observation
+
+    part = "event_date"
+    schema = None  # the store's schema, once known
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal schema
         spark = batch_df.sparkSession
-        batch_df = batch_df.withColumn(
-            "event_date", F.date_format("created_at", "yyyy-MM-dd")
-        )
-        # Only a genuinely-missing store means "first batch"; any other read
-        # failure (transient FS error, corrupt footer) must surface, not
-        # silently drop previously stored rows via the overwrite below.
-        if _store_exists(spark, store_path):
-            existing = spark.read.parquet(store_path)
-            # Partition-scoped merge: the window only needs to see store rows
-            # in the partitions this batch touches (a re-delivered key keeps
-            # its created_at, hence its partition — same contract as the
-            # reference's per-day collections, utils.py:583-584). The isin
-            # filter prunes at the store scan, so merge cost tracks touched
-            # days, not store size; dynamic partition overwrite then replaces
-            # only those same days.
-            merged = merge_by_key(
-                existing,
-                batch_df,
-                key=key,
-                order_col="scraped_at",
-                partition_col="event_date",
+        batch = batch_df.withColumn(
+            part, F.date_format("created_at", "yyyy-MM-dd")
+        ).persist()
+        try:
+            obs = Observation()
+            batch.observe(
+                obs,
+                F.collect_set(part).alias("days"),
+                F.max(F.col(part).isNull()).alias("has_null"),
+            ).write.format("noop").mode("overwrite").save()
+            seen = obs.get
+            touched = seen["days"] + ([None] if seen["has_null"] else [])
+            if not touched:  # no rows: nothing to merge
+                return
+            existing = None
+            # Only a genuinely-missing store means "first batch"; any other
+            # read failure (transient FS error, corrupt footer) must surface,
+            # not silently drop previously stored rows via the overwrite.
+            if _store_exists(spark, store_path):
+                if schema is None:
+                    schema = _typed_like(
+                        spark.read.parquet(store_path).schema, batch.schema, part
+                    )
+                existing = (
+                    spark.read.schema(schema)
+                    .parquet(store_path)
+                    .filter(_touched_filter(part, touched))
+                )
+            merged = _merge_latest(
+                existing, batch, key, order_col="scraped_at", partition_col=part
             )
-        else:
-            # no store yet — still dedup re-delivered keys within the batch
-            merged = keep_latest_per_key(batch_df, key=key, order_col="scraped_at")
-        write_partitioned(
-            merged,
-            store_path,
-            "event_date",
-            max_records_per_file=max_records_per_file,
-        )
+            write_partitioned(
+                merged, store_path, part, max_records_per_file=max_records_per_file
+            )
+            schema = merged.schema
+        finally:
+            batch.unpersist()
 
     writer = stream.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", checkpoint_path
@@ -238,6 +273,16 @@ def start_merge_sink(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _typed_like(schema: StructType, like: StructType, col: str) -> StructType:
+    """``schema`` with ``col`` retyped as ``like`` types it: partition
+    inference reads ``event_date=2025-01-01`` directories back as DATE,
+    while the sink writes (and merges on) the formatted STRING."""
+    return StructType([
+        StructField(f.name, like[col].dataType, True) if f.name == col else f
+        for f in schema.fields
+    ])
 
 
 def start_etl_lifecycle_sink(

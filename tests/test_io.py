@@ -364,6 +364,24 @@ def test_retention_sweep_rejects_mixed_width_partition_values(spark, tmp_path):
 # ---------------------------------------------- Mongo migration contract ----
 
 
+def test_existing_partition_values_missing_store_is_empty_unreadable_raises(
+    spark, tmp_path
+):
+    """Only a missing store means "no partitions": a directory that is not
+    a parquet store must raise, or a retention sweep over an unreadable
+    store would silently drop nothing."""
+    import pytest
+
+    assert existing_partition_values(
+        spark, str(tmp_path / "absent"), "event_date"
+    ).collect() == []
+    bad = tmp_path / "not_parquet"
+    (bad / "event_date=2025-01-01").mkdir(parents=True)
+    (bad / "event_date=2025-01-01" / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Exception):
+        existing_partition_values(spark, str(bad), "event_date").collect()
+
+
 def _oid(n: int) -> str:
     """ObjectId-like 24-hex string, as the Spark Mongo connector surfaces
     `_id` after the README's cast-to-string."""

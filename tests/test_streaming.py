@@ -1146,6 +1146,104 @@ def test_compact_target_files_builds_directory_shaped_base(spark, tmp_path):
     )
 
 
+def _store_rows(spark, store):
+    return sorted(
+        (r["_id"], str(r["event_date"]), r["like_count"])
+        for r in spark.read.parquet(store).collect()
+    )
+
+
+def test_merge_sink_scans_each_batch_once(spark, tmp_path):
+    """The sink materializes each micro-batch once and merges from that
+    copy, so a batch of N rows reports numInputRows == N (a second scan
+    of the source would count every row twice)."""
+    src = tmp_path / "once_src"
+    store = str(tmp_path / "once_store")
+    ck = str(tmp_path / "once_ck")
+    _write_batch(src, [R1, R2])
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    # the second batch merges into an existing store
+    rows = [R1B, {**R2, "_id": "3"}, {**R2, "_id": "4"}]
+    _write_batch(src, rows)
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [
+        len(rows)
+    ]
+    assert len(_store_rows(spark, store)) == 4
+
+
+def test_merge_sink_null_event_date_updates_in_place(spark, tmp_path):
+    """A tweet without created_at lands in the NULL event_date partition;
+    its re-delivery must merge into that row, not duplicate it."""
+    src = tmp_path / "null_src"
+    store = str(tmp_path / "null_store")
+    ck = str(tmp_path / "null_ck")
+    n1 = {**R1, "_id": "n", "created_at": None}
+    _write_batch(src, [n1, R2])
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    _write_batch(src, [{**n1, "like_count": 5, "scraped_at": "2025-01-01T12:00:00Z"}])
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    assert _store_rows(spark, store) == [("2", "2025-01-02", 1), ("n", "None", 5)]
+
+
+def test_merge_sink_key_moved_to_another_touched_day(spark, tmp_path):
+    """``merge_by_key``'s ``(partition_col, key)`` contract through the
+    sink: a re-delivered key whose created_at moves to another day lands
+    as a new row in that day and its older row stays in the old day —
+    even when the same batch touches the old day too."""
+    from mbgspark.io import merge_by_key
+
+    src = tmp_path / "move_src"
+    store = str(tmp_path / "move_store")
+    ck = str(tmp_path / "move_ck")
+    _write_batch(src, [R1, R2])  # 1 → 2025-01-01, 2 → 2025-01-02
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    moved = {**R1B, "created_at": "2025-01-02T08:00:00Z", "like_count": 7}
+    same_day = {**R1, "_id": "3"}  # touches 2025-01-01 in the same batch
+    _write_batch(src, [moved, same_day])
+    q = start_merge_sink(
+        read_tweet_stream(spark, str(src)), store, ck, available_now=True
+    )
+    q.awaitTermination(120)
+    want = [
+        ("1", "2025-01-01", 1),
+        ("1", "2025-01-02", 7),
+        ("2", "2025-01-02", 1),
+        ("3", "2025-01-01", 1),
+    ]
+    assert _store_rows(spark, store) == want
+
+    # the standalone batch merge states the same result
+    def frame(rows):
+        return spark.createDataFrame(
+            [(r["_id"], r["created_at"][:10], r["scraped_at"], r["like_count"])
+             for r in rows],
+            "_id string, event_date string, scraped_at string, like_count int",
+        )
+
+    merged = merge_by_key(
+        frame([R1, R2]), frame([moved, same_day]), partition_col="event_date"
+    )
+    assert sorted(
+        (r["_id"], r["event_date"], r["like_count"]) for r in merged.collect()
+    ) == want
+
+
 def test_merge_sink_max_records_per_file_bounds_day_files(spark, tmp_path):
     """``start_merge_sink(max_records_per_file=...)`` flows to the store
     writer: a day partition splits into ceil(rows/bound) part files —
